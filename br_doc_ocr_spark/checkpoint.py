@@ -32,9 +32,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as sf
 
 from br_doc_ocr_spark.pipeline import (
+    extract_tagged,
+    extraction_views,
+    lineage_rows,
+    materialized,
     read_transcripts,
-    run_extraction,
-    unpersist_extraction,
     with_stable_order,
 )
 
@@ -188,60 +190,40 @@ def run_resumable(
     ).withColumn(BUCKET_COL, bucket_of(sf.col("conv_id"), n_buckets))
     todo = transcripts.filter(sf.col(BUCKET_COL).isin([int(b) for b in pending]))
 
-    # persist: the bucket write and the lineage collection both consume the
-    # kernel output — one materialized pass instead of two kernel runs.
-    results, lineage = run_extraction(todo.drop(BUCKET_COL), salt=salt,
-                                      persist=lineage_path is not None)
+    tagged = extract_tagged(todo.drop(BUCKET_COL), salt=salt)
+    results, lineage = extraction_views(tagged)
     ordered = with_stable_order(results).withColumn(
         BUCKET_COL, bucket_of(sf.col("conv_id"), n_buckets))
 
-    n_rows = 0
-    try:
+    with materialized(tagged):
         # Idempotent per-bucket publish: dynamic partition overwrite
         # replaces exactly the buckets written here, leaving completed ones
         # untouched. Scoped to THIS write via the writer option — mutating
         # the session conf races concurrent writers sharing the session
-        # (ADVICE r01). Inside the try: a failed write (permissions, disk
-        # full) must still release the DISK_ONLY persisted kernel output —
-        # the unguarded write leaked it for the session lifetime
-        # (review r05).
+        # (ADVICE r01).
         (ordered.write.mode("overwrite")
          .option("partitionOverwriteMode", "dynamic")
          .partitionBy(BUCKET_COL)
          .parquet(output_path))
 
         if lineage_path:
-            lineage_rows = lineage.select(
-                sf.lit(run_id).alias("run_id"),
-                "partition_id", "row_count", "success_count", "partial_count",
-                "failed_count", "error_count", "wall_clock_ms",
-                sf.lit(snapshot_id).alias("snapshot_id"),
-            )
             # write the DataFrame directly — a toPandas/createDataFrame
             # round-trip raises CANNOT_INFER_EMPTY_SCHEMA when the pending
-            # buckets hold zero rows, wedging the resume loop forever (the
-            # crash landed before record_snapshot AND leaked the persist).
+            # buckets hold zero rows, wedging the resume loop forever.
             # Partitioned by snapshot_id with dynamic overwrite so a crash
             # BETWEEN this write and record_snapshot cannot double-count:
             # the resume regenerates the SAME snapshot id (len(completed)
             # is unchanged) and replaces its own partition instead of
             # appending a second identical batch (review r05 — plain
             # append duplicated lineage rows on exactly that crash window).
-            (lineage_rows.coalesce(1).write.mode("overwrite")
+            (lineage_rows(lineage, run_id, snapshot_id)
+             .coalesce(1).write.mode("overwrite")
              .option("partitionOverwriteMode", "dynamic")
              .partitionBy("snapshot_id")
              .parquet(lineage_path))
-            total = lineage.agg(sf.sum("row_count")).first()[0]
-            n_rows = int(total) if total is not None else 0
-        else:
-            # no lineage: count the just-written buckets from the output
-            # footers — reporting rows=0 for a run that processed millions
-            # of rows misleads resume loops and operators (review r05)
-            n_rows = (spark.read.parquet(output_path)
-                      .filter(sf.col(BUCKET_COL)
-                              .isin([int(b) for b in pending])).count())
-    finally:
-        unpersist_extraction(results)
+        # reported with or without lineage — rows=0 for a run that
+        # processed millions of rows misleads resume loops (review r05)
+        n_rows = tagged.count()
 
     # The manifest commits LAST — a crash before this line leaves the buckets
     # unrecorded and they are simply re-overwritten on resume (idempotent).

@@ -103,8 +103,8 @@ def cmd_extract(args) -> int:
         max_payload_chars=args.max_payload_chars, schema=schema,
         drop_confidence=args.no_confidence, redact_fields=redact,
         table_format=args.table_format, read_snapshot_id=args.snapshot_id)
-    # summarize the WRITTEN parquet — aggregating the returned frame would
-    # re-run the whole kernel (run_pipeline unpersists its cache on return)
+    # summarize the WRITTEN parquet — aggregating the returned (lazy)
+    # frame would re-run the whole kernel
     summary = {r["status"]: r["n"] for r in
                spark.read.parquet(args.output)
                .groupBy("status").agg(sf.count("*").alias("n")).collect()}
@@ -174,7 +174,11 @@ def cmd_resume(args) -> int:
 
 def cmd_multidoc(args) -> int:
     """FR-015: one output row per detected document segment."""
-    from br_doc_ocr_spark.pipeline import read_transcripts, run_multi_extraction
+    from br_doc_ocr_spark.pipeline import (
+        materialized,
+        read_transcripts,
+        run_multi_extraction,
+    )
 
     spark = _session(args)
     docs = run_multi_extraction(
@@ -182,9 +186,11 @@ def cmd_multidoc(args) -> int:
                          table_format=args.table_format,
                          snapshot_id=args.snapshot_id),
         salt=args.salt)
-    (docs.repartitionByRange("conv_id", "turn_idx", "doc_idx")
-     .sortWithinPartitions("conv_id", "turn_idx", "doc_idx")
-     .write.mode("overwrite").parquet(args.output))
+    # the range sort samples its input: materialized, the kernel runs once
+    with materialized(docs):
+        (docs.repartitionByRange("conv_id", "turn_idx", "doc_idx")
+         .sortWithinPartitions("conv_id", "turn_idx", "doc_idx")
+         .write.mode("overwrite").parquet(args.output))
     n = spark.read.parquet(args.output).count()
     print(json.dumps({"output": args.output, "documents": n}))
     return 0
@@ -309,12 +315,10 @@ def cmd_curate(args) -> int:
         allowed_langs=langs)
     # the full stats stack (tokenize, 24-language argmax, n-gram arrays) is
     # the expensive part — materialize it ONCE for the write AND the audit
-    # aggregates instead of recomputing per action (same DISK_ONLY
-    # discipline as run_extraction's write path)
-    from pyspark import StorageLevel
+    # aggregates instead of recomputing per action
+    from br_doc_ocr_spark.pipeline import materialized
 
-    out = out.persist(StorageLevel.DISK_ONLY)
-    try:
+    with materialized(out):
         if args.drop:
             out.filter("keep").drop("drop_reasons", "keep").write.mode(
                 "overwrite").parquet(args.output)
@@ -325,8 +329,6 @@ def cmd_curate(args) -> int:
         reasons = {r["r"]: r["n"] for r in
                    out.select(sf.explode("drop_reasons").alias("r"))
                    .groupBy("r").agg(sf.count("*").alias("n")).collect()}
-    finally:
-        out.unpersist()
     print(json.dumps({"output": args.output, "total": total, "kept": kept,
                       "dropped": total - kept,
                       "drop_reasons": dict(sorted(reasons.items()))}))

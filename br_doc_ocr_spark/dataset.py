@@ -26,6 +26,8 @@ from typing import Any
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as sf
 
+from br_doc_ocr_spark.pipeline import materialized
+
 # Reference prompt strings, byte-for-byte (dataset_adapter.py:73-82).
 SYSTEM_MESSAGE = (
     "You are an expert document extraction assistant. "
@@ -182,17 +184,14 @@ def write_training_dataset(results: DataFrame, output_dir: str,
                            key_col: str = "conv_id") -> dict[str, int]:
     """End-to-end export job: transform → optional type filter → split →
     one JSONL directory per split. Returns per-split row counts."""
-    from pyspark import StorageLevel
-
     samples = to_training_samples(results)
     if types:
         samples = filter_by_document_type(samples, types)
-    # persist ONCE: the three splits are filters over this same frame, and
-    # without it each split write recomputes the whole transform (plus any
-    # upstream extraction) from scratch — three full passes instead of one
-    # at the module's billions-of-rows scale (review r04)
-    samples = samples.persist(StorageLevel.DISK_ONLY)
-    try:
+    # materialized ONCE: the three splits are filters over this same frame,
+    # and without it each split write recomputes the whole transform (plus
+    # any upstream extraction) from scratch — three full passes instead of
+    # one at the module's billions-of-rows scale (review r04)
+    with materialized(samples):
         out = {}
         for name, part in split_dataset(samples, train_ratio, val_ratio,
                                         key_col).items():
@@ -205,8 +204,6 @@ def write_training_dataset(results: DataFrame, output_dir: str,
             out[name] = (part.sparkSession.read
                          .schema("document_type string").json(path).count())
         return out
-    finally:
-        samples.unpersist()
 
 
 class MetricsCollector:

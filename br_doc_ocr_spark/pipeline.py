@@ -16,15 +16,21 @@ Spark's execution model per the north rule:
    on (conv_id, turn_idx) — fixes the reference's nondeterministic-order bug
    (``cli/batch.py:184-190`` writes in thread-completion order),
 6. coalesced, idempotent parquet writes.
+
+One rule keeps the kernel at one run per turn: any write that consumes
+kernel output more than once goes through :func:`materialized` (DISK_ONLY
+for the block, always released). The range sort's sampling job counts as a
+consumer — without the persist it re-runs the upstream ``mapInPandas``.
 """
 
 from __future__ import annotations
 
 import time
-import weakref
+from contextlib import contextmanager
 from typing import Iterable, Iterator
 
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as sf
 
@@ -43,7 +49,7 @@ TRANSCRIPT_COLUMNS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
 # run_id/snapshot_id stamps and the optional redaction_residuals column —
 # and EXTRACT_WITH_LINEAGE_DDL duplicated _extract_ddl(redact=False); both
 # had zero readers. The authoritative kernel-output schema is
-# _extract_ddl(); the lineage schema is the select in run_pipeline.)
+# _extract_ddl(); the lineage schema is lineage_rows().)
 
 
 def _extract_ddl(redact: bool) -> str:
@@ -131,16 +137,18 @@ def _extract_partition(allowed_fields: frozenset[str] | None,
     return run
 
 
-def run_extraction(
+def extract_tagged(
     transcripts: DataFrame,
     salt: int = 8,
     target_partitions: int | None = None,
     schema: dict | None = None,
-    persist: bool = False,
     max_payload_chars: int | None = None,
     redact_fields: frozenset[str] | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Run the extraction stage → (results, lineage).
+) -> DataFrame:
+    """The kernel plan: payload cap → salted repartition → ONE
+    ``mapInPandas``. Rows carry the ``_partition_id`` / ``_batch_ms`` tags
+    that :func:`extraction_views` splits into results and lineage; callers
+    that consume both views wrap this frame in :func:`materialized`.
 
     ``salt`` splits each conv_id across up to ``salt`` shuffle keys
     (``pmod(turn_idx, salt)``) — deterministic, order-insensitive for a
@@ -162,12 +170,6 @@ def run_extraction(
     reference) appends a ``redacted_text`` column: the raw payload with
     every detected span of those fields masked as ``[FIELD]`` —
     ``core.extract.DEFAULT_REDACT_FIELDS`` covers the identifier fields.
-
-    ``persist=True`` materializes the kernel output (memory, spilling to
-    executor disk) so that consuming BOTH returned frames runs the kernel
-    once, not twice — required whenever results AND lineage are acted on
-    (the write path measured 2× without it). Callers unpersist via
-    :func:`unpersist_extraction`.
     """
     spark = transcripts.sparkSession
     n = target_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -177,25 +179,20 @@ def run_extraction(
     salted = transcripts.repartition(
         n, sf.col("conv_id"), sf.pmod(sf.col("turn_idx"), sf.lit(salt))
     )
-    extracted = salted.mapInPandas(
+    return salted.mapInPandas(
         _extract_partition(schema_field_names(schema), redact_fields),
         schema=_extract_ddl(redact_fields is not None))
-    if persist:
-        from pyspark import StorageLevel
 
-        # DISK_ONLY, deliberately: MEMORY_AND_DISK builds in-heap columnar
-        # cache batches first and OOMed the 8g JVM at 20M rows (the kernel
-        # output carries the extracted text) — serialized disk blocks keep
-        # the heap bounded like a shuffle spill, at any scale, and the
-        # single re-read for the ordered write is sequential I/O.
-        extracted = extracted.persist(StorageLevel.DISK_ONLY)
 
-    # Lineage is an aggregation over the extraction output itself — computed
-    # in the same plan (no second scan); counts are exact, wall-clock sums the
-    # per-batch kernel timings within each partition. Redacting runs also
-    # carry the per-partition residual-identifier escape count (the PII
-    # completeness audit, VERDICT r03 #5) — a count, never a payload, so the
-    # lineage table stays PII-free by schema.
+def extraction_views(tagged: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Split the tagged kernel output → (results, lineage).
+
+    Lineage is an aggregation over the kernel output itself — computed in
+    the same plan (no second scan); counts are exact, wall-clock sums the
+    per-batch kernel timings within each partition. Redacting runs also
+    carry the per-partition residual-identifier escape count (the PII
+    completeness audit, VERDICT r03 #5) — a count, never a payload, so the
+    lineage table stays PII-free by schema."""
     aggs = [
         sf.count("*").alias("row_count"),
         sf.sum(sf.when(sf.col("status") == "success", 1).otherwise(0)).alias("success_count"),
@@ -204,37 +201,63 @@ def run_extraction(
         sf.sum(sf.when(sf.col("status") == "error", 1).otherwise(0)).alias("error_count"),
         sf.sum("_batch_ms").alias("wall_clock_ms"),
     ]
-    if redact_fields is not None:
+    if "redaction_residuals" in tagged.columns:
         aggs.append(sf.sum("redaction_residuals").alias("redaction_residuals"))
-    lineage = extracted.groupBy(
+    lineage = tagged.groupBy(
         sf.col("_partition_id").alias("partition_id")
     ).agg(*aggs)
-    results = extracted.drop("_partition_id", "_batch_ms")
-    if persist:
-        _EXTRACTION_CACHES[results] = extracted
-    return results, lineage
+    return tagged.drop("_partition_id", "_batch_ms"), lineage
 
 
-# results-frame -> persisted kernel-output frame, for unpersist_extraction.
-# A side registry (not an attribute stashed on the DataFrame instance):
-# weak keys so an abandoned results frame never pins its cache entry, and
-# no reliance on DataFrame accepting ad-hoc attributes across Spark versions.
-_EXTRACTION_CACHES: "weakref.WeakKeyDictionary[DataFrame, DataFrame]" = (
-    weakref.WeakKeyDictionary()
-)
+def run_extraction(
+    transcripts: DataFrame,
+    salt: int = 8,
+    target_partitions: int | None = None,
+    schema: dict | None = None,
+    max_payload_chars: int | None = None,
+    redact_fields: frozenset[str] | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """Run the extraction stage → lazy (results, lineage); see
+    :func:`extract_tagged` for the arguments. Each view re-runs the kernel
+    when acted on — a caller that consumes them more than once (the range
+    sort counts) does so under :func:`materialized`."""
+    return extraction_views(extract_tagged(
+        transcripts, salt=salt, target_partitions=target_partitions,
+        schema=schema, max_payload_chars=max_payload_chars,
+        redact_fields=redact_fields))
 
 
-def _share_extraction_cache(derived: DataFrame, source: DataFrame) -> None:
-    """Make ``unpersist_extraction(derived)`` release ``source``'s cache."""
-    cache = _EXTRACTION_CACHES.get(source)
-    if cache is not None:
-        _EXTRACTION_CACHES[derived] = cache
+def lineage_rows(lineage: DataFrame, run_id: str,
+                 snapshot_id: str) -> DataFrame:
+    """The lineage table's columns, stamped with ``run_id``/``snapshot_id``
+    (FIXTURES.md §5) for the resume manifest."""
+    extra = (["redaction_residuals"]
+             if "redaction_residuals" in lineage.columns else [])
+    return lineage.select(
+        sf.lit(run_id).alias("run_id"),
+        sf.lit(snapshot_id).alias("snapshot_id"),
+        "partition_id", "row_count", "success_count", "partial_count",
+        "failed_count", "error_count", "wall_clock_ms", *extra,
+    )
 
 
-def unpersist_extraction(results: DataFrame) -> None:
-    cache = _EXTRACTION_CACHES.pop(results, None)
-    if cache is not None:
-        cache.unpersist()
+@contextmanager
+def materialized(df: DataFrame) -> Iterator[DataFrame]:
+    """Persist ``df`` for the block and always release it, also when the
+    block raises. Every write that consumes a frame more than once — the
+    range sort's sampling job counts — goes through here, so the kernel
+    (or any expensive upstream) runs once.
+
+    DISK_ONLY, deliberately: MEMORY_AND_DISK builds in-heap columnar cache
+    batches first and OOMed the 8g JVM at 20M rows (the kernel output
+    carries the extracted text) — serialized disk blocks keep the heap
+    bounded like a shuffle spill, at any scale, and each re-read is
+    sequential I/O."""
+    df.persist(StorageLevel.DISK_ONLY)
+    try:
+        yield df
+    finally:
+        df.unpersist()
 
 
 def with_stable_order(results: DataFrame) -> DataFrame:
@@ -274,9 +297,10 @@ def run_pipeline(
     Writes are idempotent overwrites; lineage rows are stamped with
     ``run_id``/``snapshot_id`` (FIXTURES.md §5) for the resume manifest.
     ``schema`` enables schema-guided extraction (US4) — see
-    :func:`run_extraction`. ``drop_confidence`` strips the
+    :func:`extract_tagged`. ``drop_confidence`` strips the
     confidence_scores / low_confidence_fields columns from the result (P2 —
     the reference's ``--confidence`` off path, cli/extract.py:130-137).
+    The returned frames are lazy: acting on them re-runs the kernel.
     """
     if lineage_path and not output_path:
         # the lineage write is nested under the output write — silently
@@ -289,38 +313,20 @@ def run_pipeline(
     transcripts = read_transcripts(spark, input_path,
                                    table_format=table_format,
                                    snapshot_id=read_snapshot_id)
-    # persist ONLY when the ordered write AND the lineage write both
-    # consume the kernel output — with output alone there is exactly one
-    # action inside this function, and the DISK_ONLY materialization was
-    # pure overhead (~2x the I/O of the write path at 20M rows,
-    # review r05); the returned frames recompute either way since the
-    # cache is released before return.
-    results, lineage = run_extraction(transcripts, salt=salt,
-                                      persist=bool(output_path and
-                                                   lineage_path),
-                                      max_payload_chars=max_payload_chars,
-                                      schema=schema,
-                                      redact_fields=redact_fields)
+    tagged = extract_tagged(transcripts, salt=salt,
+                            max_payload_chars=max_payload_chars,
+                            schema=schema, redact_fields=redact_fields)
+    results, lineage = extraction_views(tagged)
     if drop_confidence:
-        dropped = results.drop("confidence_scores", "low_confidence_fields")
-        _share_extraction_cache(dropped, results)
-        results = dropped
+        results = results.drop("confidence_scores", "low_confidence_fields")
     ordered = with_stable_order(results)
-    lineage = lineage.select(
-        sf.lit(run_id).alias("run_id"),
-        sf.lit(snapshot_id).alias("snapshot_id"),
-        "partition_id", "row_count", "success_count", "partial_count",
-        "failed_count", "error_count", "wall_clock_ms",
-        *(["redaction_residuals"] if redact_fields is not None else []),
-    )
+    lineage = lineage_rows(lineage, run_id, snapshot_id)
     if output_path:
-        try:
+        with materialized(tagged):
             ordered.write.mode("overwrite").parquet(output_path)
             if lineage_path:
                 # Lineage is tiny — one row per task — single file.
                 lineage.coalesce(1).write.mode("append").parquet(lineage_path)
-        finally:
-            unpersist_extraction(results)
     return ordered, lineage
 
 
@@ -366,21 +372,16 @@ def write_json_sinks(results: DataFrame, output_dir: str) -> None:
     """JSONL results + quarantine channel, split by status (cli/batch.py:
     169-174,184-207): good rows to ``results/``, error rows to ``errors/``.
 
-    The split is two actions over one upstream plan — persist the ordered
-    frame (DISK_ONLY, heap-bounded) so the kernel and the range shuffle run
-    once, not twice (the same dual-consumer rule run_pipeline documents)."""
-    from pyspark import StorageLevel
-
-    ordered = with_stable_order(results).persist(StorageLevel.DISK_ONLY)
-    try:
+    Two ordered writes over one kernel output: materialized, so the kernel
+    runs once for both writes and their range sampling."""
+    with materialized(results):
+        ordered = with_stable_order(results)
         good = ordered.filter(sf.col("status") != "error")
         bad = ordered.filter(sf.col("status") == "error")
         result_json_column(good).write.mode("overwrite").json(
             f"{output_dir}/results")
         result_json_column(bad).write.mode("overwrite").json(
             f"{output_dir}/errors")
-    finally:
-        ordered.unpersist()
 
 
 # ---------------------------------------------------------------------------

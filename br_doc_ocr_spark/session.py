@@ -12,7 +12,13 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def default_cpus() -> int:
+    """``SPARK_GRAFT_CPUS``, else the CPUs this process may run on — never
+    more task slots (and heap, see :func:`driver_memory_for`) than the
+    machine grants."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
 
 
 def driver_memory_for(cpus: int) -> str:
@@ -58,7 +64,7 @@ def build_session(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = cpus or DEFAULT_CPUS
+    cpus = cpus or default_cpus()
     shuffle_partitions = shuffle_partitions or max(cpus, 8)
     builder = SparkSession.builder.appName(app_name)
     if not _master_is_configured():

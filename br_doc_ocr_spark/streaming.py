@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as sf
 
 from br_doc_ocr_spark.core.extract import OUTPUT_SCHEMA_DDL, extract_batches
-from br_doc_ocr_spark.pipeline import TRANSCRIPT_COLUMNS
+from br_doc_ocr_spark.pipeline import TRANSCRIPT_COLUMNS, materialized
 
 TRANSCRIPT_SCHEMA_DDL = (
     "conv_id string, turn_idx int, role string, text string, tool string, "
@@ -217,10 +217,7 @@ def stream_extract_with_lineage(
         target_partitions=target_partitions)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark import StorageLevel
-
-        batch_df.persist(StorageLevel.DISK_ONLY)
-        try:
+        with materialized(batch_df):
             # per-WRITE dynamic overwrite (not the session conf): a
             # concurrent query sharing the session must never observe a
             # mutated global overwrite mode (ADVICE r01)
@@ -238,8 +235,6 @@ def stream_extract_with_lineage(
              .option("partitionOverwriteMode", "dynamic")
              .partitionBy("batch_seq")
              .parquet(lineage_path))
-        finally:
-            batch_df.unpersist()
 
     writer = (results.writeStream.foreachBatch(write_batch)
               .option("checkpointLocation", checkpoint_path))

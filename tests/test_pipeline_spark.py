@@ -471,39 +471,17 @@ def test_iceberg_reader_contract(spark, tiny_transcripts, tmp_path):
     assert results.count() == half.count()
 
 
-def test_extraction_cache_registry(spark, tiny_transcripts_path):
-    """unpersist_extraction releases the persisted kernel output via the
-    side registry (no attribute stashed on the DataFrame instance), and an
-    abandoned results frame does not pin its registry entry (weak keys)."""
-    import gc
-    import weakref
+def test_default_cpus_follow_the_process_affinity(monkeypatch):
+    """With SPARK_GRAFT_CPUS unset the session gets the CPUs this process
+    may run on — not a fixed 32 task slots and the heap sized for them."""
+    import os
 
-    transcripts = pipeline.read_transcripts(spark, tiny_transcripts_path)
-    results, _ = pipeline.run_extraction(transcripts, persist=True)
-    assert not hasattr(results, "_extraction_cache")
-    cache = pipeline._EXTRACTION_CACHES[results]
-    assert cache.is_cached
-    pipeline.unpersist_extraction(results)
-    assert results not in pipeline._EXTRACTION_CACHES
-    assert not cache.is_cached
+    from br_doc_ocr_spark.session import default_cpus
 
-    # drop_confidence derives a new frame; the registry entry must follow it
-    results2, _ = pipeline.run_extraction(transcripts, persist=True)
-    derived = results2.drop("confidence_scores", "low_confidence_fields")
-    pipeline._share_extraction_cache(derived, results2)
-    assert pipeline._EXTRACTION_CACHES[derived] is pipeline._EXTRACTION_CACHES[results2]
-    pipeline.unpersist_extraction(derived)
-    pipeline.unpersist_extraction(results2)  # pop the source frame's entry too
-
-    # weak keys: losing the last reference clears the entry
-    results3, _ = pipeline.run_extraction(transcripts, persist=True)
-    ref = weakref.ref(results3)
-    cache3 = pipeline._EXTRACTION_CACHES[results3]
-    del results3
-    gc.collect()
-    assert ref() is None
-    assert len(list(pipeline._EXTRACTION_CACHES.keys())) == 0
-    cache3.unpersist()
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_cpus() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_cpus() == 3
 
 
 def test_compact_parquet_accepts_hadoop_uri_spellings(spark, tmp_path):
