@@ -74,29 +74,31 @@ def _parse_redact(value: str | None) -> frozenset[str] | None:
     return frozenset(out) if out else None
 
 
+def _parse_schema_and_redact(args) -> tuple[dict | None,
+                                             frozenset[str] | None]:
+    """``--schema`` and ``--redact``, shared by ``extract`` and
+    ``extract-one``. A missing/invalid schema file or an unknown redact
+    field raises ValueError (SchemaError subclasses it); callers print it
+    to stderr and exit 2, never a raw traceback."""
+    schema = None
+    if args.schema:
+        from br_doc_ocr_spark.core.schemas import load_schema
+
+        schema = load_schema(args.schema)
+    return schema, _parse_redact(args.redact)
+
+
 def cmd_extract(args) -> int:
     from pyspark.sql import functions as sf
 
     from br_doc_ocr_spark.pipeline import run_pipeline
 
-    spark = _session(args)
-    schema = None
-    if args.schema:
-        from br_doc_ocr_spark.core.schemas import load_schema
-
-        # same clean-exit contract as --redact: a missing/invalid schema
-        # file prints to stderr and exits 2, never a raw traceback
-        # (review r05 — SchemaError subclasses ValueError)
-        try:
-            schema = load_schema(args.schema)
-        except ValueError as e:
-            print(e, file=sys.stderr)
-            return 2
     try:
-        redact = _parse_redact(args.redact)
+        schema, redact = _parse_schema_and_redact(args)
     except ValueError as e:
         print(e, file=sys.stderr)
         return 2
+    spark = _session(args)
     run_pipeline(
         spark, args.input, output_path=args.output,
         lineage_path=args.lineage, salt=args.salt, run_id=args.run_id,
@@ -130,20 +132,8 @@ def cmd_extract_one(args) -> int:
             # a missing file, never a traceback
             print(f"cannot read {args.file}: {e}", file=sys.stderr)
             return 2
-    schema = None
-    if args.schema:
-        from br_doc_ocr_spark.core.schemas import load_schema
-
-        # same clean-exit contract as --redact: a missing/invalid schema
-        # file prints to stderr and exits 2, never a raw traceback
-        # (review r05 — SchemaError subclasses ValueError)
-        try:
-            schema = load_schema(args.schema)
-        except ValueError as e:
-            print(e, file=sys.stderr)
-            return 2
     try:
-        redact = _parse_redact(getattr(args, "redact", None))
+        schema, redact = _parse_schema_and_redact(args)
     except ValueError as e:
         print(e, file=sys.stderr)
         return 2
@@ -178,6 +168,7 @@ def cmd_multidoc(args) -> int:
         materialized,
         read_transcripts,
         run_multi_extraction,
+        with_stable_order,
     )
 
     spark = _session(args)
@@ -188,9 +179,8 @@ def cmd_multidoc(args) -> int:
         salt=args.salt)
     # the range sort samples its input: materialized, the kernel runs once
     with materialized(docs):
-        (docs.repartitionByRange("conv_id", "turn_idx", "doc_idx")
-         .sortWithinPartitions("conv_id", "turn_idx", "doc_idx")
-         .write.mode("overwrite").parquet(args.output))
+        with_stable_order(docs, "doc_idx").write.mode("overwrite").parquet(
+            args.output)
     n = spark.read.parquet(args.output).count()
     print(json.dumps({"output": args.output, "documents": n}))
     return 0

@@ -9,16 +9,19 @@ status) keeps the reference's exact semantics (fields.py).
 
 It is consumed two ways, with identical bytes:
 
-- the Spark job wraps :func:`extract_batch` in ``mapInPandas`` (one Arrow
+- every Spark path — batch, resume and streaming (:func:`extract_batch`)
+  and multidoc (:func:`extract_documents_batch`) — reaches it through
+  ``pipeline.kernel_plan``, the one ``mapInPandas`` adapter (one Arrow
   crossing per partition, zero per-row Python at the Spark boundary);
 - the golden oracle calls :func:`extract_batch` directly on a whole pandas
-  table, single-threaded.
+  table, single-threaded, and :func:`extract_one` runs one payload without
+  Spark (the CLI ``extract-one`` command).
 """
 
 from __future__ import annotations
 
 import re
-from typing import Any, Iterable
+from typing import Any
 
 import pandas as pd
 
@@ -399,21 +402,6 @@ def extract_batch(batch: pd.DataFrame,
     columns = OUTPUT_COLUMNS + (["redacted_text", "redaction_residuals"]
                                 if redact_fields is not None else [])
     return result[columns]
-
-
-def extract_batches(batches: Iterable[pd.DataFrame],
-                    allowed_fields: frozenset[str] | None = None,
-                    redact_fields: frozenset[str] | None = None
-                    ) -> Iterable[pd.DataFrame]:
-    """Iterator form for ``DataFrame.mapInPandas`` — one task consumes one
-    partition's Arrow batches; per-partition init (compiled regexes) is free
-    because patterns live at module import. The canonical skip-empty-batch
-    wrapper for EVERY mapInPandas consumer (batch closures and streaming
-    alike) — bind extra kernel options with ``functools.partial`` instead of
-    re-implementing the loop."""
-    for batch in batches:
-        if len(batch):
-            yield extract_batch(batch, allowed_fields, redact_fields)
 
 
 # ---------------------------------------------------------------------------

@@ -8,8 +8,9 @@ Spark's execution model per the north rule:
 2. **salted repartition by conv_id** — extraction is per-row, so we are free
    to break a 10^9-turn conversation across ``salt`` tasks; without salting a
    single heavy conv_id stalls one task (SURVEY.md §4.3),
-3. exactly **one Arrow crossing**: ``mapInPandas(extract_batches)`` over the
-   shared kernel (zero per-row Python at the Spark boundary),
+3. exactly **one Arrow crossing**: :func:`kernel_plan`'s single
+   ``mapInPandas`` over the shared kernel (zero per-row Python at the Spark
+   boundary) — batch, resume, multidoc and streaming all build it there,
 4. per-partition **lineage** rows (partition id, row counts, status tallies,
    wall-clock) — PII-free by schema (counts and timings only, NFR-005/006),
 5. **stable turn ordering** restored for the sink via range-partitioned sort
@@ -27,7 +28,7 @@ from __future__ import annotations
 
 import time
 from contextlib import contextmanager
-from typing import Iterable, Iterator
+from typing import Callable, Iterable, Iterator
 
 import pandas as pd
 from pyspark import StorageLevel
@@ -43,23 +44,15 @@ from br_doc_ocr_spark.core.extract import (
 )
 
 TRANSCRIPT_COLUMNS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-
-# (Two former module constants deleted, review r05: LINEAGE_SCHEMA_DDL had
-# drifted from the lineage rows run_pipeline actually writes — missing the
-# run_id/snapshot_id stamps and the optional redaction_residuals column —
-# and EXTRACT_WITH_LINEAGE_DDL duplicated _extract_ddl(redact=False); both
-# had zero readers. The authoritative kernel-output schema is
-# _extract_ddl(); the lineage schema is lineage_rows().)
+TAG_COLUMNS = ("_partition_id", "_batch_ms")
 
 
 def _extract_ddl(redact: bool) -> str:
-    """Kernel-output DDL for mapInPandas; `redacted_text` +
-    `redaction_residuals` ride between the kernel columns and the lineage
-    tags exactly where extract_batch emits them, so name- and
-    position-matching modes both line up."""
-    base = OUTPUT_SCHEMA_DDL + (
+    """Kernel-output DDL; `redacted_text` + `redaction_residuals` ride
+    after the kernel columns exactly where extract_batch emits them, so
+    name- and position-matching modes both line up."""
+    return OUTPUT_SCHEMA_DDL + (
         ", redacted_text string, redaction_residuals int" if redact else "")
-    return base + ", _partition_id int, _batch_ms long"
 
 
 def read_transcripts(spark: SparkSession, path: str,
@@ -110,12 +103,11 @@ def read_transcripts(spark: SparkSession, path: str,
     return spark.read.parquet(path).select(*TRANSCRIPT_COLUMNS)
 
 
-def _extract_partition(allowed_fields: frozenset[str] | None,
-                       redact_fields: frozenset[str] | None = None):
-    """Build the per-partition kernel closure. One task = one partition.
-    Emits extraction rows tagged with the task's partition id and per-batch
-    wall-clock (first row of each batch carries the batch's elapsed ms; the
-    rest carry 0) so lineage aggregates exactly."""
+def _tagged(kernel: Callable[[pd.DataFrame], pd.DataFrame]):
+    """The one ``mapInPandas`` body: one task = one partition. Skips empty
+    batches and tags the kernel's rows with the task's partition id and
+    per-batch wall-clock (first row of each batch carries the batch's
+    elapsed ms; the rest carry 0) so lineage aggregates exactly."""
 
     def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
@@ -126,37 +118,60 @@ def _extract_partition(allowed_fields: frozenset[str] | None,
             if not len(batch):
                 continue
             t0 = time.perf_counter()
-            out = extract_batch(batch, allowed_fields, redact_fields)
-            elapsed_ms = int((time.perf_counter() - t0) * 1000)
-            out["_partition_id"] = pid
+            out = kernel(batch)
             ms = [0] * len(out)
-            ms[0] = elapsed_ms
+            ms[0] = int((time.perf_counter() - t0) * 1000)
+            out["_partition_id"] = pid
             out["_batch_ms"] = ms
             yield out
 
     return run
 
 
+def kernel_plan(transcripts: DataFrame,
+                kernel: Callable[[pd.DataFrame], pd.DataFrame], ddl: str,
+                partitions: int | None = None,
+                salt: int | None = None) -> DataFrame:
+    """The one plan every extraction path builds: exchange → ONE
+    ``mapInPandas`` of :func:`_tagged` ``(kernel)``, whose output is
+    ``ddl`` plus the :data:`TAG_COLUMNS`.
+
+    With ``salt`` set, the exchange is the salted hash repartition into
+    ``partitions`` (default: the session shuffle-partition conf) keyed on
+    ``(conv_id, pmod(turn_idx, salt))`` — deterministic, order-insensitive
+    for a per-row map, and it splits each conv_id across up to ``salt``
+    shuffle keys, defusing long-conversation skew. With only ``partitions``
+    set it is a round-robin repartition; with neither there is no exchange
+    (streaming: one task per input split)."""
+    if salt is not None:
+        n = partitions or int(
+            transcripts.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        transcripts = transcripts.repartition(
+            n, sf.col("conv_id"), sf.pmod(sf.col("turn_idx"), sf.lit(salt)))
+    elif partitions:
+        transcripts = transcripts.repartition(partitions)
+    return transcripts.mapInPandas(
+        _tagged(kernel), schema=ddl + ", _partition_id int, _batch_ms long")
+
+
 def extract_tagged(
     transcripts: DataFrame,
-    salt: int = 8,
+    salt: int | None = 8,
     target_partitions: int | None = None,
     schema: dict | None = None,
     max_payload_chars: int | None = None,
     redact_fields: frozenset[str] | None = None,
 ) -> DataFrame:
-    """The kernel plan: payload cap → salted repartition → ONE
-    ``mapInPandas``. Rows carry the ``_partition_id`` / ``_batch_ms`` tags
-    that :func:`extraction_views` splits into results and lineage; callers
+    """The extraction kernel plan: payload cap → :func:`kernel_plan`. Rows
+    carry the ``_partition_id`` / ``_batch_ms`` tags that
+    :func:`extraction_views` splits into results and lineage; callers
     that consume both views wrap this frame in :func:`materialized`.
 
-    ``salt`` splits each conv_id across up to ``salt`` shuffle keys
-    (``pmod(turn_idx, salt)``) — deterministic, order-insensitive for a
-    per-row map, and it defuses long-conversation skew. ``target_partitions``
-    defaults to the session shuffle-partition conf. ``schema`` enables
-    schema-guided extraction (US4): a JSON-Schema dict whose field names
-    bound the extracted field set (shipped to executors in the task closure —
-    the broadcast-variable pattern for a driver-side config).
+    ``salt`` and ``target_partitions`` pick the exchange, see
+    :func:`kernel_plan` (``salt=None`` is the streaming plan). ``schema``
+    enables schema-guided extraction (US4): a JSON-Schema dict whose field
+    names bound the extracted field set (shipped to executors in the task
+    closure — the broadcast-variable pattern for a driver-side config).
 
     ``max_payload_chars`` caps each payload BEFORE the Arrow crossing with a
     codegen'd ``substring`` — the graft analog of the reference's
@@ -171,17 +186,19 @@ def extract_tagged(
     every detected span of those fields masked as ``[FIELD]`` —
     ``core.extract.DEFAULT_REDACT_FIELDS`` covers the identifier fields.
     """
-    spark = transcripts.sparkSession
-    n = target_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     if max_payload_chars is not None:
         transcripts = transcripts.withColumn(
             "text", sf.substring("text", 1, max_payload_chars))
-    salted = transcripts.repartition(
-        n, sf.col("conv_id"), sf.pmod(sf.col("turn_idx"), sf.lit(salt))
-    )
-    return salted.mapInPandas(
-        _extract_partition(schema_field_names(schema), redact_fields),
-        schema=_extract_ddl(redact_fields is not None))
+    allowed_fields = schema_field_names(schema)
+
+    def kernel(batch: pd.DataFrame) -> pd.DataFrame:
+        # positional call of this module's extract_batch: the task closure
+        # picks up whatever that name is bound to when the plan is built
+        return extract_batch(batch, allowed_fields, redact_fields)
+
+    return kernel_plan(transcripts, kernel,
+                       _extract_ddl(redact_fields is not None),
+                       partitions=target_partitions, salt=salt)
 
 
 def extraction_views(tagged: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -206,7 +223,7 @@ def extraction_views(tagged: DataFrame) -> tuple[DataFrame, DataFrame]:
     lineage = tagged.groupBy(
         sf.col("_partition_id").alias("partition_id")
     ).agg(*aggs)
-    return tagged.drop("_partition_id", "_batch_ms"), lineage
+    return tagged.drop(*TAG_COLUMNS), lineage
 
 
 def run_extraction(
@@ -260,16 +277,16 @@ def materialized(df: DataFrame) -> Iterator[DataFrame]:
         df.unpersist()
 
 
-def with_stable_order(results: DataFrame) -> DataFrame:
-    """Restore per-conversation turn order for sinks/comparisons.
+def with_stable_order(results: DataFrame, *extra_keys: str) -> DataFrame:
+    """Restore per-conversation turn order for sinks/comparisons;
+    ``extra_keys`` break ties within a turn (multidoc's ``doc_idx``).
 
     ``repartitionByRange`` + ``sortWithinPartitions`` gives a globally ordered
     layout without a single-reducer sort — the window-free way to make output
     order deterministic at any scale (SURVEY.md §2.5/§2.6 O4).
     """
-    return results.repartitionByRange("conv_id", "turn_idx").sortWithinPartitions(
-        "conv_id", "turn_idx"
-    )
+    keys = ("conv_id", "turn_idx", *extra_keys)
+    return results.repartitionByRange(*keys).sortWithinPartitions(*keys)
 
 
 def run_pipeline(
@@ -334,18 +351,10 @@ def run_multi_extraction(transcripts: DataFrame, salt: int = 8,
                          target_partitions: int | None = None) -> DataFrame:
     """FR-015 flatMap form: one output row per detected document segment
     (reference: ``extract_document(multi_document=True)``, extraction.py:
-    102-119). Same salted-shuffle discipline as the 1:1 kernel."""
-    spark = transcripts.sparkSession
-    n = target_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    salted = transcripts.repartition(
-        n, sf.col("conv_id"), sf.pmod(sf.col("turn_idx"), sf.lit(salt)))
-
-    def run(batches):
-        for batch in batches:
-            if len(batch):
-                yield extract_documents_batch(batch)
-
-    return salted.mapInPandas(run, schema=MULTIDOC_SCHEMA_DDL)
+    102-119). Same plan as the 1:1 kernel, salted exchange included."""
+    return kernel_plan(transcripts, extract_documents_batch,
+                       MULTIDOC_SCHEMA_DDL, partitions=target_partitions,
+                       salt=salt).drop(*TAG_COLUMNS)
 
 
 # ---------------------------------------------------------------------------

@@ -7,26 +7,32 @@ each micro-batch runs the SAME Arrow kernel, and Spark's checkpoint gives
 exactly-once file-source progress tracking — the streaming twin of
 ``checkpoint.run_resumable``'s manifest.
 
-Two entry points:
+The kernel plan is the batch job's own (``pipeline.extract_tagged`` with
+no salt): readStream → one ``mapInPandas`` crossing, no exchange unless
+``target_partitions`` asks for one. On top of it:
 
-- :func:`stream_extract` — readStream → one ``mapInPandas`` crossing →
-  append-mode parquet sink (per-turn results, same schema as the batch job);
-- :func:`stream_status_counts` — event-time tumbling-window status metrics
-  with a watermark for late data (the lineage analog, windowed by turn ``ts``).
+- :func:`stream_extract` — append-mode parquet sink (per-turn results, same
+  schema as the batch job);
+- :func:`stream_extract_with_lineage` — per-micro-batch results plus status
+  tallies, idempotent under replay;
+- :func:`status_counts` — event-time tumbling-window status metrics with a
+  watermark for late data (the lineage analog, windowed by turn ``ts``).
 
-Both accept ``availableNow`` trigger for drain-and-stop semantics (used by
-tests and backfills).
+The ``stream_*`` entry points accept the ``availableNow`` trigger for
+drain-and-stop semantics (used by tests and backfills).
 """
 
 from __future__ import annotations
 
-import functools
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as sf
 
-from br_doc_ocr_spark.core.extract import OUTPUT_SCHEMA_DDL, extract_batches
-from br_doc_ocr_spark.pipeline import TRANSCRIPT_COLUMNS, materialized
+from br_doc_ocr_spark.pipeline import (
+    TAG_COLUMNS,
+    TRANSCRIPT_COLUMNS,
+    extract_tagged,
+    materialized,
+)
 
 TRANSCRIPT_SCHEMA_DDL = (
     "conv_id string, turn_idx int, role string, text string, tool string, "
@@ -34,13 +40,48 @@ TRANSCRIPT_SCHEMA_DDL = (
 )
 
 
-def read_transcript_stream(spark: SparkSession, input_path: str,
-                           max_files_per_trigger: int | None = None) -> DataFrame:
-    reader = (spark.readStream.schema(TRANSCRIPT_SCHEMA_DDL)
+def _file_stream(spark: SparkSession, ddl: str, input_path: str,
+                 max_files_per_trigger: int | None) -> DataFrame:
+    reader = (spark.readStream.schema(ddl)
               .option("recursiveFileLookup", "true"))
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.parquet(input_path).select(*TRANSCRIPT_COLUMNS)
+    return reader.parquet(input_path)
+
+
+def _start(writer, checkpoint_path: str, available_now: bool):
+    """Start a streaming query with its checkpoint, draining what is
+    available and stopping when ``available_now``."""
+    writer = writer.option("checkpointLocation", checkpoint_path)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def _append_parquet(df: DataFrame, output_path: str, checkpoint_path: str,
+                    available_now: bool):
+    """Append-mode parquet file sink: exactly-once via the sink commit log."""
+    return _start(df.writeStream.format("parquet").option("path", output_path)
+                  .outputMode("append"), checkpoint_path, available_now)
+
+
+def _overwrite_batch(df: DataFrame, batch_id: int, path: str) -> None:
+    """Write one foreachBatch micro-batch idempotently: partitioned by
+    ``batch_seq`` with per-WRITE dynamic partition overwrite, so a replay
+    rewrites exactly its own partition. Per write, not the session conf: a
+    concurrent query sharing the session must never observe a mutated
+    global overwrite mode."""
+    (df.withColumn("batch_seq", sf.lit(batch_id))
+     .write.mode("overwrite")
+     .option("partitionOverwriteMode", "dynamic")
+     .partitionBy("batch_seq")
+     .parquet(path))
+
+
+def read_transcript_stream(spark: SparkSession, input_path: str,
+                           max_files_per_trigger: int | None = None) -> DataFrame:
+    return _file_stream(spark, TRANSCRIPT_SCHEMA_DDL, input_path,
+                        max_files_per_trigger).select(*TRANSCRIPT_COLUMNS)
 
 
 def extract_stream(transcripts: DataFrame,
@@ -61,14 +102,9 @@ def extract_stream(transcripts: DataFrame,
     ``redact_fields`` mirrors the batch pipeline's PII scrubbing: the same
     kernel appends ``redacted_text`` per micro-batch (span-exact masking,
     see ``core.extract.redact_text``)."""
-    if target_partitions:
-        transcripts = transcripts.repartition(target_partitions)
-    ddl = OUTPUT_SCHEMA_DDL + (
-        ", redacted_text string, redaction_residuals int"
-        if redact_fields is not None else "")
-    kernel = (functools.partial(extract_batches, redact_fields=redact_fields)
-              if redact_fields is not None else extract_batches)
-    return transcripts.mapInPandas(kernel, schema=ddl)
+    return extract_tagged(transcripts, salt=None,
+                          target_partitions=target_partitions,
+                          redact_fields=redact_fields).drop(*TAG_COLUMNS)
 
 
 def deduplicated_stream(transcripts: DataFrame,
@@ -127,12 +163,8 @@ def stream_extract_deduplicated(
     deduped = deduplicated_stream(
         read_transcript_stream(spark, input_path), watermark)
     results = extract_stream(deduped, target_partitions=target_partitions)
-    writer = (results.writeStream.outputMode("append")
-              .option("checkpointLocation", checkpoint_path)
-              .format("parquet").option("path", output_path))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _append_parquet(results, output_path, checkpoint_path,
+                           available_now)
 
 
 def stream_extract(
@@ -152,13 +184,8 @@ def stream_extract(
     results = extract_stream(
         read_transcript_stream(spark, input_path, max_files_per_trigger),
         target_partitions=target_partitions)
-    writer = (results.writeStream.format("parquet")
-              .option("path", output_path)
-              .option("checkpointLocation", checkpoint_path)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _append_parquet(results, output_path, checkpoint_path,
+                           available_now)
 
 
 def status_counts(results: DataFrame, window: str = "1 hour",
@@ -172,23 +199,6 @@ def status_counts(results: DataFrame, window: str = "1 hour",
             .select(sf.col("w.start").alias("window_start"),
                     sf.col("w.end").alias("window_end"),
                     "status", "n_turns", "total_fields"))
-
-
-def stream_status_counts(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    checkpoint_path: str,
-    available_now: bool = False,
-):
-    counts = status_counts(extract_stream(read_transcript_stream(spark, input_path)))
-    writer = (counts.writeStream.format("parquet")
-              .option("path", output_path)
-              .option("checkpointLocation", checkpoint_path)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_extract_with_lineage(
@@ -218,29 +228,16 @@ def stream_extract_with_lineage(
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         with materialized(batch_df):
-            # per-WRITE dynamic overwrite (not the session conf): a
-            # concurrent query sharing the session must never observe a
-            # mutated global overwrite mode (ADVICE r01)
-            (batch_df.withColumn("batch_seq", sf.lit(batch_id))
-             .write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("batch_seq")
-             .parquet(output_path))
-            (batch_df.groupBy("status")
-             .agg(sf.count("*").alias("row_count"),
-                  sf.sum("n_fields").alias("field_count"))
-             .withColumn("batch_seq", sf.lit(batch_id))
-             .coalesce(1)
-             .write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("batch_seq")
-             .parquet(lineage_path))
+            _overwrite_batch(batch_df, batch_id, output_path)
+            _overwrite_batch(
+                batch_df.groupBy("status")
+                .agg(sf.count("*").alias("row_count"),
+                     sf.sum("n_fields").alias("field_count"))
+                .coalesce(1),
+                batch_id, lineage_path)
 
-    writer = (results.writeStream.foreachBatch(write_batch)
-              .option("checkpointLocation", checkpoint_path))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(results.writeStream.foreachBatch(write_batch),
+                  checkpoint_path, available_now)
 
 
 # ---------------------------------------------------------------------------
@@ -325,17 +322,10 @@ def stream_assembled_conversations(
         extract_stream(read_transcript_stream(spark, input_path)))
 
     def write_snapshot(batch_df: DataFrame, batch_id: int) -> None:
-        (batch_df.withColumn("batch_seq", sf.lit(batch_id))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch_seq")
-         .parquet(output_path))
+        _overwrite_batch(batch_df, batch_id, output_path)
 
-    return (assembled.writeStream.foreachBatch(write_snapshot)
-            .outputMode("update")
-            .option("checkpointLocation", checkpoint_path)
-            .trigger(availableNow=True)
-            .start())
+    return _start(assembled.writeStream.foreachBatch(write_snapshot)
+                  .outputMode("update"), checkpoint_path, available_now=True)
 
 
 def read_media_stream(spark: SparkSession, input_path: str,
@@ -344,11 +334,8 @@ def read_media_stream(spark: SparkSession, input_path: str,
     ``multimodal.MEDIA_SCHEMA_DDL`` shape: opaque payload + typed metadata)."""
     from br_doc_ocr_spark.ops.multimodal import MEDIA_SCHEMA_DDL
 
-    reader = (spark.readStream.schema(MEDIA_SCHEMA_DDL)
-              .option("recursiveFileLookup", "true"))
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.parquet(input_path)
+    return _file_stream(spark, MEDIA_SCHEMA_DDL, input_path,
+                        max_files_per_trigger)
 
 
 def stream_media_features(
@@ -405,10 +392,4 @@ def stream_media_features(
             f"kind must be 'image' or 'audio', got {kind!r} — video decode "
             f"is a documented library seam (ops/multimodal.py), not a "
             f"streaming path")
-    writer = (feats.writeStream.format("parquet")
-              .option("path", output_path)
-              .option("checkpointLocation", checkpoint_path)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _append_parquet(feats, output_path, checkpoint_path, available_now)

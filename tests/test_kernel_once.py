@@ -1,5 +1,5 @@
-"""Every ordered write runs the extraction kernel once per input turn, and
-leaves nothing cached behind.
+"""Every ordered write, and the streaming micro-batch write, runs the
+extraction kernel once per input turn, and leaves nothing cached behind.
 
 The range sort in ``with_stable_order`` samples its input; without the
 kernel output materialized, that sampling job re-runs the upstream
@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import pytest
 
-from br_doc_ocr_spark import checkpoint, cli, pipeline
+from br_doc_ocr_spark import checkpoint, cli, pipeline, streaming
 
 CALLS = [
     "run_pipeline_output",
@@ -21,6 +21,7 @@ CALLS = [
     "run_resumable_lineage",
     "write_json_sinks",
     "cli_multidoc",
+    "stream_extract_with_lineage",
 ]
 
 
@@ -47,6 +48,10 @@ def _call(name: str, spark, src: str, out: str) -> None:
     elif name == "cli_multidoc":
         assert cli.main(["multidoc", "--input", src,
                          "--output", f"{out}/o"]) == 0
+    elif name == "stream_extract_with_lineage":
+        streaming.stream_extract_with_lineage(
+            spark, src, f"{out}/o", f"{out}/l", f"{out}/c",
+            available_now=True).awaitTermination()
 
 
 @pytest.fixture(scope="module", params=CALLS)
